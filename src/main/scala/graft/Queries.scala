@@ -4344,6 +4344,7 @@ object Queries {
       .select(col("act_symbol"), to_date(col("ds")).as("date"), col("close"))
     graft.plans.ChainPipeline.loadDay(s, resPath("chain/2024-01-15"), prices,
       java.sql.Date.valueOf("2024-01-15"))
+      .orderBy("act_symbol", "expiration", "strike", "call_put")
   }
 
   /** d02 — volatility HTML extraction incl. sentinel quarantine and year

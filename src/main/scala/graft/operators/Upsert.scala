@@ -10,8 +10,10 @@ import org.apache.spark.sql.functions._
   * (keep-first; reference: transform-load.2025-08-19.rkt:209,394) for the
   * chain/volatility tables, and `ON CONFLICT DO UPDATE` (last-wins;
   * reference: weeklies-transform-load.rkt:52-64) for the weekly roster.
-  * Both are one windowed dedup on the PK — a single PK shuffle, no
-  * driver-side state, idempotent by construction (`load ∘ load = load`).
+  * [[keepFirst]] and [[lastWins]] are one windowed dedup on the PK;
+  * [[upsert]] keeps the preferred table whole and adds only the other
+  * side's new keys. No driver-side state, idempotent by construction
+  * (`load ∘ load = load`).
   */
 object Upsert {
 
@@ -37,11 +39,22 @@ object Upsert {
   }
 
   /** Merge `incoming` into `existing` on `pk`. `preferExisting = true`
-    * reproduces ON CONFLICT DO NOTHING; `false` reproduces DO UPDATE. */
+    * reproduces ON CONFLICT DO NOTHING; `false` reproduces DO UPDATE.
+    *
+    * The preferred side is kept whole: its rows stream to the writer with
+    * no exchange or sort, so it must already be PK-unique (a table with
+    * a PRIMARY KEY is, reference: schema.sql:7-27). The other side loses
+    * the keys the preferred side holds — a null-safe anti-join against
+    * the preferred side's PK columns only — and keeps one row per
+    * remaining key (null PK parts compare equal). */
   def upsert(existing: DataFrame, incoming: DataFrame, pk: Seq[String],
       preferExisting: Boolean): DataFrame = {
-    val tagged = existing.withColumn("__src", lit(if (preferExisting) 0 else 1))
-      .unionByName(incoming.withColumn("__src", lit(if (preferExisting) 1 else 0)))
-    keepFirst(tagged, pk, Seq(col("__src"))).drop("__src")
+    val (kept, other) =
+      if (preferExisting) (existing, incoming) else (incoming, existing)
+    val keys = kept.select(pk.map(k => col(k).as(s"__pk_$k")): _*)
+    val taken = pk.map(k => col(k) <=> col(s"__pk_$k")).reduce(_ && _)
+    kept.unionByName(
+        other.join(keys, taken, "left_anti").dropDuplicates(pk))
+      .select(existing.columns.toIndexedSeq.map(col): _*)
   }
 }

@@ -1,7 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 import graft.model.Schemas
@@ -12,13 +12,14 @@ import graft.sources.ChainJson
   * (reference: transform-load.2025-08-19.rkt:102-152, orchestrated at
   * :158-225) re-expressed as ONE distributed dataflow:
   *
-  *   read day folder → as-of mark price → target grid → closest
-  *   expiration → closest strike (keep both sides) → PK dedup
+  *   read day folder → as-of mark price → closest expiration → closest
+  *   strike (keep both sides) → Call/Put unpivot → PK dedup
   *
-  * Shuffle budget: everything partitions by `act_symbol` (the window
-  * passes and the final PK dedup); the target grids are broadcast. At
-  * 100 TB the day folder is a partition-pruned scan, prices-per-day are
-  * small (one row per symbol → broadcast), and AQE handles symbol skew.
+  * Shuffle budget: the day folder is scanned once and crosses one
+  * exchange, keyed by `act_symbol`; both selection windows and the PK
+  * dedup reuse that partitioning. The marks (one row per symbol, with
+  * their 27 target strikes) are broadcast. At 100 TB the day folder is a
+  * partition-pruned scan and AQE handles symbol skew.
   *
   * Selection semantics (:147-152): for each of 4 target expirations pick
   * the nearest REAL expiration; within it, for each of 27 target strikes
@@ -38,67 +39,57 @@ object ChainPipeline {
         lit(folderDate), Seq.empty)
       .select(col("act_symbol"), col("close").cast(Schemas.Dec).as("mark"))
 
-  /** Target-grid selection over a loaded option_chain DataFrame. */
-  def selectNearTheMoney(chain: DataFrame, marks: DataFrame,
+  /** Target-grid selection over rows keyed by `act_symbol`, `expiration`
+    * and `strike` — straddle rows or option_chain rows; every row at a
+    * selected (expiration, strike) is kept, with the input's columns.
+    * Symbols without a mark select nothing. Rows with a null expiration
+    * or strike cannot satisfy the option_chain PK and are not candidates.
+    *
+    * Each argmin is a window `min(struct(distance, value))`, so equal
+    * distances go to the smaller value: over `act_symbol` for the 4
+    * target expirations (:51-58), then over (`act_symbol`, `expiration`)
+    * for the 27 target strikes (:60-66). The second window reuses the
+    * first one's partitioning. */
+  def selectNearTheMoney(rows: DataFrame, marks: DataFrame,
       folderDate: java.sql.Date): DataFrame = {
-    // 4 target expirations: folderDate + {2,4,6,8} weeks (:123-126)
-    val targetExps = Seq(2, 4, 6, 8)
-      .map(w => date_add(lit(folderDate), 7 * w).as("t_exp"))
-    val teDf = chain.sparkSession.range(1).select(
-      explode(array(targetExps: _*)).as("t_exp"))
-
-    // closest real expiration per (symbol, target) (:51-58)
-    val exps = chain.select("act_symbol", "expiration").distinct()
-    val wExp = Window.partitionBy("act_symbol", "t_exp")
-      .orderBy(abs(datediff(col("expiration"), col("t_exp"))).asc,
-        col("expiration").asc)
-    val bestExp = exps.crossJoin(broadcast(teDf))
-      .withColumn("__rn", row_number().over(wExp)).where(col("__rn") === 1)
-      .select(col("act_symbol"), col("t_exp"),
-        col("expiration").as("sel_exp"))
-
-    // 27 target strikes = mark × multipliers (:114-122), per symbol
-    val ts = marks.select(col("act_symbol"), explode(array(
-        NearestSelect.strikeMultipliers.map(m =>
-          (col("mark") * lit(m)).as("t")): _*)).as("t_strike"))
-
-    // closest real strike per (symbol, selected expiration, target strike)
-    // over the strikes actually listed at that expiration (:60-66, :147-152)
-    val strikes = chain.join(bestExp, Seq("act_symbol"))
-      .where(col("expiration") === col("sel_exp"))
-      .select("act_symbol", "t_exp", "sel_exp", "strike").distinct()
-    val wStrike = Window.partitionBy("act_symbol", "t_exp", "t_strike")
-      .orderBy(abs(col("strike") - col("t_strike")).asc, col("strike").asc)
-    val bestStrike = strikes.join(ts, Seq("act_symbol"))
-      .withColumn("__rn", row_number().over(wStrike)).where(col("__rn") === 1)
-      .select(col("act_symbol"), col("t_exp"), col("sel_exp"),
-        col("strike").as("sel_strike")).distinct()
-
-    // keep ALL chain rows (both sides) at each selected (expiration, strike)
-    val sel = bestStrike
-      .select(col("act_symbol").as("s_sym"), col("sel_exp"), col("sel_strike"))
-      .distinct()
-    chain.join(broadcast(sel),
-        chain("act_symbol") === sel("s_sym") &&
-          chain("expiration") === sel("sel_exp") &&
-          chain("strike") === sel("sel_strike"))
-      .select(chain.columns.toIndexedSeq.map(chain(_)): _*)
+    def nearest(distance: Column, value: Column, w: WindowSpec): Column =
+      min(struct(distance.as("d"), value.as("v"))).over(w).getField("v")
+    // 27 target strikes = mark × multipliers (:114-122), once per symbol
+    val targets = marks.select(col("act_symbol"), array(
+      NearestSelect.strikeMultipliers.map(m => col("mark") * lit(m)): _*)
+      .as("__t_strikes"))
+    val bySymbol = Window.partitionBy("act_symbol")
+    val byExpiration = Window.partitionBy("act_symbol", "expiration")
+    val selExps = NearestSelect.targetExpirations(lit(folderDate)).map(t =>
+      nearest(abs(datediff(col("expiration"), t)), col("expiration"),
+        bySymbol))
+    val selStrikes = NearestSelect.strikeMultipliers.indices.map(i =>
+      nearest(abs(col("strike") - col("__t_strikes")(i)), col("strike"),
+        byExpiration))
+    rows.where(col("expiration").isNotNull && col("strike").isNotNull)
+      .withColumn("__sel", array(selExps: _*))
+      .where(array_contains(col("__sel"), col("expiration")))
+      // joined after the exchange, so the target arrays are never shuffled
+      .join(broadcast(targets), Seq("act_symbol"))
+      .withColumn("__sel", array(selStrikes: _*))
+      .where(array_contains(col("__sel"), col("strike")))
+      .select(rows.columns.toIndexedSeq.map(col): _*)
   }
 
   /** Full day pipeline: JSON folder → selected, PK-deduped option_chain
-    * rows, ordered like the export (Q3 sort, dump-dat.rkt:66-76). */
+    * rows, in no particular order (callers that need one sort). The
+    * selection runs on straddle rows, before the Call/Put unpivot. */
   def loadDay(spark: SparkSession, dayDir: String, prices: DataFrame,
       folderDate: java.sql.Date, allOptions: Boolean = false): DataFrame = {
-    val chain = ChainJson.toOptionChain(
-      ChainJson.readDay(spark, dayDir), folderDate)
+    val straddles = ChainJson.listedStraddles(ChainJson.readDay(spark, dayDir))
     val selected =
-      if (allOptions) chain
-      else selectNearTheMoney(chain, markPrices(prices, folderDate), folderDate)
+      if (allOptions) straddles
+      else selectNearTheMoney(straddles, markPrices(prices, folderDate),
+        folderDate)
     // bid ASC NULLS LAST, spelled as plain columns (isNull sorts false
     // first) — keepFirst applies .asc itself, and a pre-wrapped SortOrder
     // would nest and kick the sort out of codegen.
-    Upsert.keepFirst(selected, Schemas.optionChainPk,
-        Seq(col("bid").isNull, col("bid")))
-      .orderBy("act_symbol", "expiration", "strike", "call_put")
+    Upsert.keepFirst(ChainJson.unpivot(selected, folderDate),
+      Schemas.optionChainPk, Seq(col("bid").isNull, col("bid")))
   }
 }

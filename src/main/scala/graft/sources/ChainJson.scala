@@ -50,17 +50,26 @@ object ChainJson {
 
   private val D = Schemas.Dec
 
-  /** Straddle rows → option_chain rows.
+  /** Straddle rows whose both option symbols are listed — inner-join
+    * semantics on side availability (reference:
+    * transform-load.2025-08-19.rkt:128) — with `expiration` and `strike`
+    * typed as in option_chain. One row per straddle, so selections that
+    * keep both sides of a strike can run here, before [[unpivot]]. */
+  def listedStraddles(straddles: DataFrame): DataFrame =
+    straddles
+      .where(col("call_optionsymbol").isNotNull &&
+        col("put_optionsymbol").isNotNull)
+      .withColumn("expiration", to_date(col("expirationdate")))
+      .withColumn("strike", col("strike").cast(D))
+
+  /** Listed straddle rows → option_chain rows.
     *
-    * - Rows missing either option symbol are dropped — inner-join
-    *   semantics on side availability (reference:
-    *   transform-load.2025-08-19.rkt:128).
     * - Unpivot one straddle row into a Call and a Put row (reference:
     *   :128-142) via explode of a 2-element struct array.
     * - `vol` = ivint/100 truncated to scale 4; greeks truncated to scale
     *   4 (reference Q8 insert, :195-208). bid/ask/theoprice pass through.
     */
-  def toOptionChain(straddles: DataFrame, date: java.sql.Date): DataFrame = {
+  def unpivot(listed: DataFrame, date: java.sql.Date): DataFrame = {
     def side(p: String) = struct(
       lit(if (p == "call") "Call" else "Put").as("call_put"),
       col(s"${p}_bid").as("bid"),
@@ -73,12 +82,8 @@ object ChainJson {
       col(s"${p}_vega").as("vega"),
       col(s"${p}_rho").as("rho"))
 
-    straddles
-      .where(col("call_optionsymbol").isNotNull &&
-        col("put_optionsymbol").isNotNull)
-      .select(col("act_symbol"),
-        to_date(col("expirationdate")).as("expiration"),
-        col("strike").cast(D).as("strike"),
+    listed
+      .select(col("act_symbol"), col("expiration"), col("strike"),
         explode(array(side("call"), side("put"))).as("o"))
       .select(
         lit(date).as("date"),
@@ -99,4 +104,9 @@ object ChainJson {
         Cleansing.truncTo(col("o.vega"), 4).cast(D).as("vega"),
         Cleansing.truncTo(col("o.rho"), 4).cast(D).as("rho"))
   }
+
+  /** Straddle rows → option_chain rows: rows missing either option
+    * symbol are dropped ([[listedStraddles]]), the rest [[unpivot]]ed. */
+  def toOptionChain(straddles: DataFrame, date: java.sql.Date): DataFrame =
+    unpivot(listedStraddles(straddles), date)
 }

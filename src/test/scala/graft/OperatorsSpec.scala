@@ -80,6 +80,47 @@ class OperatorsSpec extends SparkSpec {
       preferExisting = false)
     assert(rows(update.orderBy("pk").select("v")).map(_.getString(0)) ==
       Seq("new", "keep", "ins"))
+
+    // property: equals the union + keepFirst form on generated tables.
+    // The preferred side is PK-unique; the other side repeats keys, and
+    // both have null PK parts (nulls compare equal, as in the window).
+    import org.scalacheck.{Gen, Prop, Test}
+    import org.scalacheck.rng.Seed
+    type Key = (Option[Int], Option[String])
+    val keyGen: Gen[Key] = for {
+      a <- Gen.frequency(1 -> Gen.const(None), 4 -> Gen.choose(0, 3).map(Some(_)))
+      b <- Gen.frequency(1 -> Gen.const(None), 3 -> Gen.oneOf("a", "b").map(Some(_)))
+    } yield (a, b)
+    // per case: the preferred side's keys, the other side's keys
+    val caseGen = for {
+      kept <- Gen.listOf(keyGen).map(_.distinct)
+      other <- Gen.listOf(keyGen)
+    } yield (kept, other)
+    val pk = Seq("c", "k1", "k2")
+    def table(keys: Seq[(Int, Key)], tag: String) = keys.zipWithIndex
+      .map { case ((c, (a, b)), i) => (c, a, b, s"$tag$i") }
+      .toDF("c", "k1", "k2", "v")
+    def byKey(df: org.apache.spark.sql.DataFrame) = rows(df)
+      .groupBy(r => Seq(r.get(0), r.get(1), r.get(2)))
+    val prop = Prop.forAllNoShrink(Gen.listOfN(20, caseGen)) { cases =>
+      val kept = table(cases.zipWithIndex.flatMap { case ((k, _), c) => k.map(c -> _) }, "k")
+      val other = table(cases.zipWithIndex.flatMap { case ((_, o), c) => o.map(c -> _) }, "o")
+      val keptRows = byKey(kept)
+      val otherRows = byKey(other)
+      Prop.all(Seq(true, false).map { preferExisting =>
+        val (e, i) = if (preferExisting) (kept, other) else (other, kept)
+        val got = byKey(Upsert.upsert(e, i, pk, preferExisting))
+        val spec = byKey(ReferenceForms.upsert(e, i, pk, preferExisting))
+        val bad = got.collect { case (k, rs) if rs.size != 1 ||
+            !keptRows.get(k).fold(otherRows(k).contains(rs.head))(_ == rs) => k }
+        Prop(bad.isEmpty && got.keySet == spec.keySet) :|
+          s"preferExisting=$preferExisting: bad keys ${bad.take(3)}, " +
+          s"key sets differ by ${(got.keySet diff spec.keySet) ++ (spec.keySet diff got.keySet)}"
+      }: _*)
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(3)
+      .withInitialSeed(Seed(17L)).withWorkers(1), prop)
+    assert(res.passed, res.status.toString)
   }
 
   test("snapshot diff: classification and apply round-trip") {

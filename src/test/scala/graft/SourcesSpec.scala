@@ -57,8 +57,155 @@ class SourcesSpec extends SparkSpec {
     // same (expiration, strike)
     assert(got.distinct.length == got.length)
     // idempotence: re-running the pipeline yields identical output
+    // (loadDay promises no order, so compare in PK order)
+    val pk = graft.model.Schemas.optionChainPk.map(col)
     val again = ChainPipeline.loadDay(spark, chainDir, prices, day)
-    assert(rows(again).toString == rows(out).toString)
+    assert(rows(again.orderBy(pk: _*)).toString ==
+      rows(out.orderBy(pk: _*)).toString)
+  }
+
+  /** Writes one `<symbol>.json` per entry of `chains` (the JSON arrays'
+    * elements, already rendered) into a fresh day folder. */
+  private def writeDay(chains: Map[String, Seq[String]]): String = {
+    val dir = java.nio.file.Files.createTempDirectory("chain-day")
+    chains.foreach { case (sym, straddles) =>
+      java.nio.file.Files.writeString(dir.resolve(s"$sym.json"),
+        straddles.mkString("[\n", ",\n", "\n]\n"))
+    }
+    dir.toString
+  }
+
+  private def straddle(exp: String, strike: String, callBid: String = "1.00",
+      putBid: String = "1.00", call: Boolean = true, put: Boolean = true)
+      : String = {
+    def sym(listed: Boolean) = if (listed) "\"X\"" else "null"
+    s"""{"expirationdate": $exp, "strike": $strike, """ +
+      s""""call_optionsymbol": ${sym(call)}, "call_bid": $callBid, """ +
+      s""""put_optionsymbol": ${sym(put)}, "put_bid": $putBid}"""
+  }
+
+  test("chain pipeline: a null strike or expiration removes no candidates") {
+    val base = Seq("95", "100", "105").map(k => straddle("\"2024-01-26\"", k))
+    val dir = writeDay(Map(
+      "AAA" -> (base :+ straddle("\"2024-01-26\"", "null")),
+      "BBB" -> base,
+      "CCC" -> (base :+ straddle("null", "100"))))
+    val prices = Seq("AAA", "BBB", "CCC").map((_, "2024-01-12", 100.0))
+      .toDF("act_symbol", "ds", "close").withColumn("date", to_date($"ds"))
+    val got = rows(ChainPipeline.loadDay(spark, dir, prices, day)
+        .select("act_symbol", "expiration", "strike"))
+      .groupBy(_.getString(0)).map { case (sym, rs) =>
+        sym -> rs.map(r => (r.getDate(1).toString,
+          r.getDecimal(2).stripTrailingZeros.toPlainString)).sorted
+      }
+    val want = Seq("100", "105", "95").flatMap(k => Seq.fill(2)(("2024-01-26", k)))
+    assert(got == Map("AAA" -> want, "BBB" -> want, "CCC" -> want))
+  }
+
+  test("chain pipeline plan: one JSON scan, no range-partitioning exchange") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val prices = Seq(("AAA", "2024-01-12", 101.0), ("BBB", "2024-01-10", 6.0))
+      .toDF("act_symbol", "ds", "close").withColumn("date", to_date($"ds"))
+    val out = ChainPipeline.loadDay(spark, chainDir, prices, day)
+    assert(out.collect().nonEmpty)
+    val plan = out.queryExecution.executedPlan
+    val helper = new AdaptiveSparkPlanHelper {}
+    val jsonScans = helper.collect(plan) {
+      case s: FileSourceScanExec if s.relation.fileFormat.isInstanceOf[JsonFileFormat] => s
+    }
+    val rangeExchanges = helper.collect(plan) {
+      case e: ShuffleExchangeExec
+          if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+    }
+    assert(jsonScans.size == 1, plan.toString)
+    assert(rangeExchanges.isEmpty, plan.toString)
+  }
+
+  test("property: fused selection equals the join-based spec on generated chains") {
+    import org.scalacheck.{Gen, Prop, Test}
+    import org.scalacheck.rng.Seed
+
+    final case class Quote(exp: Int, strike: BigDecimal, call: Boolean,
+        put: Boolean, copies: Int) // 0: once, 1: exact copy, 2: rebid copy
+    final case class Chain(mark: Option[Double], quotes: Seq[Quote])
+
+    // days after the folder date; each pair around 14, 28, 42 and 56 is
+    // equidistant from a target expiration
+    val expOffsets = Seq(6, 13, 15, 21, 27, 29, 35, 41, 43, 49, 55, 57, 63, 70, 90)
+    def quotesAt(exp: Int, mark: Double, step: Double): Gen[Seq[Quote]] = {
+      val center = math.round(mark / step) * step
+      val grid = (-12 to 12).map(k => center + k * step).filter(_ > 0)
+        .map(BigDecimal(_))
+      for {
+        strikes <- Gen.atLeastOne(grid)
+        sides <- Gen.listOfN(strikes.size, Gen.frequency(
+          18 -> Gen.const((true, true)), 1 -> Gen.const((false, true)),
+          1 -> Gen.const((true, false))))
+        copies <- Gen.listOfN(strikes.size,
+          Gen.frequency(8 -> Gen.const(0), 1 -> Gen.const(1), 1 -> Gen.const(2)))
+      } yield strikes.toSeq.zip(sides).zip(copies).map {
+        case ((k, (c, p)), n) => Quote(exp, k, c, p, n)
+      }
+    }
+    // marks 100 (5-wide grid) and 102.5 put targets half-way between strikes
+    val chainGen: Gen[Chain] = for {
+      mark <- Gen.frequency(
+        5 -> Gen.oneOf(100.0, 102.5, 50.0, 20.0, 7.5, 33.3).map(Option(_)),
+        1 -> Gen.const(Option.empty[Double]))
+      step <- Gen.oneOf(1.0, 2.5, 5.0)
+      exps <- Gen.atLeastOne(expOffsets)
+      quotes <- Gen.sequence[List[Seq[Quote]], Seq[Quote]](
+        exps.toList.map(quotesAt(_, mark.getOrElse(100.0), step)))
+    } yield Chain(mark, quotes.flatten)
+
+    val folder = day.toLocalDate
+    def render(c: Chain): Seq[String] = {
+      var n = 0
+      def bid(nullable: Boolean): String = {
+        n += 1
+        if (nullable && n % 11 == 0) "null" else f"${n / 100.0}%.2f"
+      }
+      c.quotes.flatMap { q =>
+        val exp = "\"" + folder.plusDays(q.exp.toLong) + "\""
+        def row(nullable: Boolean) = straddle(exp, q.strike.toString,
+          bid(nullable), bid(nullable), q.call, q.put)
+        val first = row(nullable = true)
+        q.copies match {
+          case 0 => Seq(first)
+          case 1 => Seq(first, first)
+          case _ => Seq(first, row(nullable = false))
+        }
+      }
+    }
+
+    val pk = graft.model.Schemas.optionChainPk
+    val bidFirst = Seq(col("bid").isNull, col("bid"))
+    def sorted(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    val prop = Prop.forAllNoShrink(Gen.listOfN(12, chainGen)) { chains =>
+      val named = chains.zipWithIndex.map { case (c, i) => s"S$i" -> c }
+      val dir = writeDay(named.map { case (s, c) => s -> render(c) }.toMap)
+      // a later close the as-of mark must skip; unmarked symbols have only that
+      val prices = named.flatMap { case (s, c) =>
+        (s, folder.plusDays(2).toString, 999.0) +:
+          c.mark.toSeq.map(m => (s, folder.minusDays(3).toString, m))
+      }.toDF("act_symbol", "ds", "close").withColumn("date", to_date($"ds"))
+      val got = sorted(ChainPipeline.loadDay(spark, dir, prices, day))
+      val spec = sorted(graft.operators.Upsert.keepFirst(
+        ReferenceForms.selectNearTheMoney(
+          ChainJson.toOptionChain(ChainJson.readDay(spark, dir), day),
+          ChainPipeline.markPrices(prices, day), day), pk, bidFirst))
+      Prop(spec.nonEmpty && got == spec) :|
+        s"${got.size} rows, spec ${spec.size}; only here: " +
+        s"${got.diff(spec).take(3)}; only in spec: ${spec.diff(got).take(3)}"
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(4)
+      .withInitialSeed(Seed(2024L)).withWorkers(1), prop)
+    assert(res.passed, res.status.toString)
   }
 
   test("chain html: positional call/put projection + OCC onmouseover decode") {
