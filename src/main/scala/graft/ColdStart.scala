@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Fresh-JVM single-query cold-start timing — the measurement the
   * memoized-family table cannot show: [[Bench]] and [[ScaleProbe]] run
   * many queries in one process, so the FIRST query of a new session
@@ -20,17 +18,9 @@ object ColdStart {
     val name = args(1)
     val q = Queries.all.getOrElse(name,
       sys.error(s"unknown query $name"))
-    // same parallelism contract as Bench (SPARK_GRAFT_CPUS, default
-    // 4): the cold-start rows sit beside the bench tables and must
-    // measure the same configuration
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // same session as Bench: the cold-start rows sit beside the bench
+    // tables and must measure the same configuration
+    val spark = Session.local()
     val t0 = System.nanoTime()
     val n = q(spark, dir).count()
     val sec = (System.nanoTime() - t0) / 1e9

@@ -1,11 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection main: prints `explain("formatted")` for the headline
   * queries so pushdown / broadcast / shuffle structure can be reviewed
   * (scan lines must show PushedFilters + pruned ReadSchema; small dims
-  * must broadcast; no stray exchanges). */
+  * must broadcast; no stray exchanges). Each frame's own QueryExecution
+  * runs first, so the output holds the AQE Final Plan (runtime exchange
+  * and stage reuse, invisible before execution) beside the Initial Plan.
+  *
+  * Usage: `runMain graft.Explain [name...]`; data from
+  * `SPARK_GRAFT_SF_DIR` (default sf0.01). */
 object Explain {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
@@ -26,10 +29,10 @@ object Explain {
         // up to the single mapPartitions parse
         "x55_opq_encode", "q36_weeklies_asof", "x56_media_meta",
         // round 7: encode scans read the checkpointed (id, codes) frame
-        // (single pq_encode); x02's prefix-filter candidates stay
-        // ids-only; x07 reads checkpointed band keys; x61/x62's
-        // two-level assignment must stay exchange-free
-        "x02_ngram_jaccard", "x07_lsh_ann", "x57_semantic_dedup",
+        // (single pq_encode); x02's prefix-filter candidates (listed
+        // above) stay ids-only; x07 reads checkpointed band keys;
+        // x61/x62's two-level assignment must stay exchange-free
+        "x07_lsh_ann", "x57_semantic_dedup",
         "x59_semantic_trained", "x61_two_level_assign",
         "x62_two_level_dedup",
         // x64's count joins must stay linear equi-joins of the bigram
@@ -54,14 +57,13 @@ object Explain {
         // with a data-derived side — the r12 weak item); x240's AUC
         // is one grid window + a 1-row agg, no pair join anywhere
         "x231_quantile_normalize", "x240_roc_auc")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     names.foreach { n =>
       println(s"\n========== $n ==========")
-      Queries.all(n)(spark, dir).explain("formatted")
+      val df = Queries.all(n)(spark, dir)
+      // executes df's OWN QueryExecution (count() would plan a new one)
+      df.queryExecution.toRdd.foreach(_ => ())
+      df.explain("formatted")
     }
     spark.stop()
   }

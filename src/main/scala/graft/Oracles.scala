@@ -813,9 +813,9 @@ object Oracles {
     // vector from the rotation matrix R and the codebooks emitted
     // below as literals — only the driver-side Jacobi polar factor
     // (not SQL-expressible) is pinned; the distributed rotate+encode
-    // is verified end to end. Literals regenerated by graft.OpqPin;
+    // is verified end to end. Literals regenerated by graft.Pin x55;
     // pinned to sf0.01 (the learn is data-dependent), deterministic
-    // relearn asserted by OpqPin and OpqSpec. Rotation z_j =
+    // relearn asserted by Pin x55 and OpqSpec. Rotation z_j =
     // sum_i R[i][j]*x[i] left-to-right, matching matVecT codegen;
     // per-subspace distances use the x38 cast/order discipline.
     "x55_opq_encode" ->
@@ -5389,7 +5389,7 @@ object Oracles {
   // The x66 pinned adaptive-LSH pair set: random-hyperplane signatures
   // are hash-specific (no SQL engine reproduces them), so the PAIRS are
   // a deterministic golden at sf0.01 (the x04/x07 discipline; regenerate
-  // with `runMain graft.AdaptPin`). x66 checks the pairs themselves with
+  // with `runMain graft.Pin x66`). x66 checks the pairs themselves with
   // exact cosines; x74/x75 recompute the connected-component clustering
   // and survivor rules in SQL FROM these pairs (the x16 recursive-CTE
   // discipline), so only the hash-specific pair set is pinned while

@@ -1227,7 +1227,7 @@ object Queries {
     * fixed-sweep Jacobi), then emit the ROTATED encode of the whole
     * corpus in the x38 long form. The oracle re-computes z = Rᵀ·x and
     * the nearest-codeword argmin for every vector in DuckDB from R and
-    * the codebooks pinned as SQL literals ([[graft.OpqPin]] regenerates
+    * the codebooks pinned as SQL literals (`graft.Pin x55` regenerates
     * them; pinned to sf0.01, so Verify omits the oracle at other
     * scales). Only the driver-side polar factor is pinned — the
     * distributed rotate+encode path is verified end to end. d=16 slice

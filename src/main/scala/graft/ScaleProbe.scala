@@ -30,7 +30,9 @@ import org.apache.spark.sql.functions._
   * Usage: `runMain graft.ScaleProbe [copies] [q1,q2,...]` (default 10,
   * all arms). The optional filter restricts which arms run — every
   * requested arm still runs at ALL scales in this one process, so
-  * per-query scale factors stay same-JVM comparable.
+  * per-query scale factors stay same-JVM comparable. Parallelism comes
+  * from `SPARK_GRAFT_CPUS` (default 4); the ARCHITECTURE.md table was
+  * measured at 32.
   */
 object ScaleProbe {
 
@@ -38,12 +40,7 @@ object ScaleProbe {
     val copies = args.headOption.map(_.toInt).getOrElse(10)
     val only: Option[Set[String]] =
       args.drop(1).headOption.map(_.split(",").toSet)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     val base = "/root/testdata/sf0.1"
     val out = s"tmp-scale/sfx$copies"
     buildIfAbsent(spark, base, out, copies)

@@ -991,44 +991,6 @@ object Dedup {
           bits).toAggregateExpression()).as("simhash"))
   }
 
-  /** The r15-and-earlier 32-decimal-sum form of [[weightedSimhash]] —
-    * kept as the executable specification the fixed-width aggregate is
-    * property-tested against (ExtSpec pins row-identical signatures on
-    * randomized corpora). Not used on any query path. */
-  private[graft] def weightedSimhashDecimal(docs: DataFrame, idCol: String,
-      textCol: String, bits: Int = 32): DataFrame = {
-    require(bits >= 1 && bits <= 60, s"weightedSimhash: bits=$bits not in [1,60]")
-    import org.apache.spark.sql.types.DecimalType
-    val toks = docs.select(col(idCol).as("id"),
-      explode(TextAnalysis.tokens(lower(col(textCol)))).as("term"))
-    val tf = toks.groupBy("id", "term").agg(count(lit(1)).as("tf"))
-    val dfc = tf.groupBy("term").agg(count(lit(1)).as("df"))
-    val n = docs.agg(count(lit(1)).cast("long").as("n"))
-    val idf = dfc.crossJoin(broadcast(n))
-      .select(col("term"),
-        log(col("n").cast("double") / col("df"))
-          .cast(DecimalType(28, 12)).as("idf"))
-    val wgt = tf.join(idf, Seq("term"))
-      .select(col("id"),
-        (polyHash(col("term")) * lit(1073741824L) +
-          polyHashReversed(col("term"))).as("__h"),
-        (when(col("tf") < lit(1000000000L), col("tf").cast(DecimalType(9, 0)))
-          .otherwise(raise_error(concat(
-            lit("weightedSimhash: term frequency "),
-            col("tf").cast("string"),
-            lit(" overflows the DECIMAL(9,0) tf bound")))
-            .cast(DecimalType(9, 0)))
-          * col("idf")).as("__w"))
-    val sums = (0 until bits).map(j =>
-      sum(when(shiftright(col("__h"), j).bitwiseAND(lit(1L)) === 1,
-        col("__w")).otherwise(-col("__w"))).as(s"__s$j"))
-    wgt.groupBy(col("id")).agg(sums.head, sums.tail: _*)
-      .select(col("id"),
-        (0 until bits).map(j =>
-          when(col(s"__s$j") > 0, lit(1L << j)).otherwise(lit(0L)))
-          .reduce(_ + _).as("simhash"))
-  }
-
   /** Weighted-SimHash near-dup pairs via Manku banding: the `bits`-bit
     * signature splits into `bands` equal slices; documents sharing ANY
     * slice value become candidates, verified by exact Hamming distance.

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.Cleansing
 
@@ -8,14 +8,6 @@ import graft.functions.Cleansing
   * (reference: dump-dat.rkt:44-94; dump-dolt.rkt:46-148).
   */
 object Export {
-
-  /** Every column `::text` (reference: dump-dat.rkt:51-65). Decimals keep
-    * their declared scale; NULL handling is the writer's concern. */
-  def allToString(df: DataFrame): DataFrame =
-    df.select(df.columns.toIndexedSeq.map(c => col(c).cast("string").as(c)): _*)
-
-  /** `coalesce(col::text, '')` (reference: dump-dolt.rkt:104-120). */
-  def textOrBlank(c: Column): Column = coalesce(c.cast("string"), lit(""))
 
   /** Dolt export scaling: bid/ask trunc 2, vol/greeks trunc 4
     * (reference: dump-dolt.rkt:60-67). */

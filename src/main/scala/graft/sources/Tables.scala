@@ -78,8 +78,6 @@ object Tables {
 
   def documentsWide(s: SparkSession, d: String): DataFrame =
     readWide(s, d, "documents")
-  def embeddingsWide(s: SparkSession, d: String): DataFrame =
-    readWide(s, d, "embeddings")
   def lineitemWide(s: SparkSession, d: String): DataFrame =
     readWide(s, d, "lineitem")
 

@@ -1823,7 +1823,7 @@ class ExtSpec extends SparkSpec {
       for (bits <- Seq(8, 32, 60)) {
         val a = rows(Dedup.weightedSimhash(d, "doc_id", "text", bits)
           .orderBy("id")).map(r => (r.getLong(0), r.getLong(1)))
-        val b = rows(Dedup.weightedSimhashDecimal(d, "doc_id", "text", bits)
+        val b = rows(ReferenceForms.weightedSimhashDecimal(d, "doc_id", "text", bits)
           .orderBy("id")).map(r => (r.getLong(0), r.getLong(1)))
         assert(a == b, s"trial=$trial bits=$bits")
       }

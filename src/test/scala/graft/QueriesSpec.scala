@@ -28,6 +28,13 @@ class QueriesSpec extends SparkSpec {
       scala.concurrent.Await.result(
         scala.concurrent.Future.sequence(futs),
         scala.concurrent.duration.Duration(20, "min"))
+    } catch { case e: Throwable =>
+      // no query may still be planning once the caller restores its
+      // session confs (the broadcast sweep's threshold): interrupt the
+      // stragglers and wait for them before rethrowing
+      pool.shutdownNow()
+      pool.awaitTermination(5, java.util.concurrent.TimeUnit.MINUTES)
+      throw e
     } finally pool.shutdown()
   }
 
